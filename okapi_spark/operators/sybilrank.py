@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -26,6 +27,8 @@ from pyspark.storagelevel import StorageLevel
 from okapi_spark.bsp import BSPResult, no_adaptive, run_supersteps
 from okapi_spark.graph.graph import Graph
 from okapi_spark.plans.broadcast import auto_state_broadcast
+from okapi_spark.plans.csr_blocks import staged_blocks
+from okapi_spark.plans.fixpoint import SumProgram, run_fixpoint
 
 
 def sybilrank(
@@ -49,10 +52,10 @@ def sybilrank(
     (state shuffles into the src join, map-side partial sum combines
     messages).
 
-    ``mode="csr"``: the scatter is weighted-PageRank-shaped, so the
-    resident-staged-block kernel is PageRank's own
-    ``_csr_messages_bcast`` over the trust shares — zero exchange,
-    zero edge rescan (plans/csr_blocks.py); same byte gate.
+    ``mode="csr"``: the scatter is weighted-PageRank-shaped, so it is
+    the staged-fixpoint executor's ``SumProgram`` (plans/fixpoint.py)
+    over staged trust-share blocks with base 0 and damping 1 — zero
+    exchange, zero edge rescan; same byte gate.
     """
     if mode not in ("sql", "csr"):
         raise ValueError(f"unknown sybilrank mode {mode!r}")
@@ -86,43 +89,25 @@ def sybilrank(
     shares = graph.edges.join(deg.withColumnRenamed("id", "src"), "src").select(
         "src", "dst", (F.col("weight") / F.col("deg")).alias("share")
     )
-    from okapi_spark.operators.pagerank import _EPOCH_COUNTER
-
-    epoch = next(_EPOCH_COUNTER)
-    bcast_slot: list = [None]
     if mode == "csr":
-        # same staged layout and kernel as pagerank mode='csr' — and
-        # MEMOIZED on the Graph (round 6, like pr_blocks/sp_blocks):
-        # the trust-share blocks are a pure layout of the edge set
-        from okapi_spark.operators.pagerank import _pr_pack
-        from okapi_spark.plans.csr_blocks import (
-            choose_task_count, cleanup_blocks, default_block_dir, stage_blocks,
+        # the trust-share blocks are a pure layout of the edge set,
+        # staged once per P and memoized on the Graph (like pr_blocks).
+        # ``0.0 + 1.0·msum`` is IEEE-identical to the sql plan's
+        # ``coalesce(recv, 0)``.
+        seeds = np.asarray(
+            sorted(r.id for r in trusted.select("id").distinct().collect()), dtype="int64"
         )
-
-        n_edges = graph.num_edges()
-        k_tasks = choose_task_count(n_edges, num_partitions)
-
-        def _stage() -> tuple[str, int]:
-            stage_epoch = next(_EPOCH_COUNTER)
-            shares_by_pid = (
-                shares.withColumn(
-                    "pid", F.pmod(F.xxhash64("dst"), F.lit(num_partitions)).cast("int")
-                ).repartition(num_partitions, "pid")
-            )
-            bdir = default_block_dir(spark)
-            with no_adaptive(spark):
-                staged = stage_blocks(
-                    shares_by_pid, num_partitions, _pr_pack, "sr", stage_epoch, bdir
-                )
-            assert staged == n_edges, f"staged {staged} share rows != |E|={n_edges}"
-            return bdir, stage_epoch
-
-        def ensure_staged() -> tuple[str, int]:
-            return graph.derived(
-                ("sr_blocks", num_partitions),
-                _stage,
-                cleanup=lambda v: cleanup_blocks(v[0]),
-            )
+        prog = SumProgram(
+            "sr", 0.0, 1.0, col="send", seeds=seeds, seed_value=total_trust / n_trusted,
+        )
+        res = run_fixpoint(
+            graph, prog,
+            lambda: staged_blocks(
+                graph, ("sr_blocks", num_partitions), "sr",
+                shares.select("src", "dst", F.col("share").alias("w")), num_partitions,
+            ),
+            num_partitions, power_iterations,
+        )
     else:
         # broadcast mode: dst-partitioned scatter layout (see
         # Graph.by_dst); shuffle mode: src layout so the state
@@ -131,24 +116,13 @@ def sybilrank(
             StorageLevel.MEMORY_AND_DISK
         )
         shares.count()
+        init_rank = F.when(F.col("is_trusted"), total_trust / n_trusted).otherwise(0.0)
+        state0 = (
+            vertices.join(trusted.select("id").distinct().withColumn("is_trusted", F.lit(True)), "id", "left")
+            .select("id", init_rank.alias("send"))
+        )
 
-    init_rank = F.when(F.col("is_trusted"), total_trust / n_trusted).otherwise(0.0)
-    state0 = (
-        vertices.join(trusted.select("id").distinct().withColumn("is_trusted", F.lit(True)), "id", "left")
-        .select("id", init_rank.alias("send"))
-    )
-
-    def superstep(ss: int, state: DataFrame):
-        if mode == "csr":
-            from okapi_spark.operators.pagerank import _csr_messages_bcast
-
-            bdir, staged_epoch = ensure_staged()
-            recv = _csr_messages_bcast(
-                spark, num_partitions, k_tasks, staged_epoch, bdir,
-                state.select("id", F.col("send").alias("rank")),
-                bcast_slot, n_rows=n, tag="sr",
-            ).select(F.col("dst").alias("id"), F.col("msum").alias("recv"))
-        else:
+        def superstep(ss: int, state: DataFrame):
             sends = state.select("id", "send").withColumnRenamed("id", "src")
             if state_broadcast:
                 sends = F.broadcast(sends)
@@ -162,51 +136,15 @@ def sybilrank(
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.sum("m").alias("recv"))
             )
-        new_state = vertices.join(recv, "id", "left").select(
-            "id", F.coalesce("recv", F.lit(0.0)).alias("send")
-        )
-        return new_state, {}
-
-    from contextlib import nullcontext
-
-    res = None
-    if mode == "csr":
-        from okapi_spark.operators.pagerank import (
-            _FUSE_MAX_EDGES, _ids_sorted, _pagerank_csr_fused,
-        )
-
-        if n_edges <= _FUSE_MAX_EDGES:
-            # ALL power iterations in ONE Spark job (round 6): the
-            # update is exactly weighted PageRank's fused kernel with
-            # base=0, damping=1 — ``0.0 + 1.0·msum`` is IEEE-identical
-            # to the per-iteration plan's ``coalesce(recv, 0)``, so the
-            # trust vector is bit-identical by construction.
-            import numpy as np
-
-            bdir, staged_epoch = ensure_staged()
-            ids = _ids_sorted(graph, vertices, n)
-            t_ids = np.asarray(
-                sorted(r.id for r in trusted.select("id").distinct().collect()),
-                dtype="int64",
+            new_state = vertices.join(recv, "id", "left").select(
+                "id", F.coalesce("recv", F.lit(0.0)).alias("send")
             )
-            ranks0 = np.zeros(n, dtype="float64")
-            if len(t_ids) and n:
-                pos = np.searchsorted(ids, t_ids)
-                np.clip(pos, 0, n - 1, out=pos)
-                valid = ids[pos] == t_ids  # seeds absent from V drop out
-                ranks0[pos[valid]] = total_trust / n_trusted
-            res = _pagerank_csr_fused(
-                spark, ids, ranks0, n, 0.0, 1.0, 0.0, "max",
-                power_iterations, power_iterations, num_partitions,
-                staged_epoch, bdir, n_edges, tag="sr",
-            )
-            res.state = res.state.withColumnRenamed("rank", "send")
-    if res is None:
-        with no_adaptive(spark) if (state_broadcast or mode == "csr") else nullcontext():
+            return new_state, {}
+
+        from contextlib import nullcontext
+
+        with no_adaptive(spark) if state_broadcast else nullcontext():
             res = run_supersteps(state0, superstep, max_supersteps=power_iterations)
-    if bcast_slot[0] is not None:
-        bcast_slot[0].destroy()
-        bcast_slot[0] = None
     final = res.state.join(deg, "id", "left").select(
         "id",
         F.when(F.col("deg") > 0, F.col("send") / F.col("deg")).otherwise(0.0).alias("rank"),

@@ -201,7 +201,7 @@ def _oriented_array(
 
     The |V|-row degree table is gathered executor-side into two sorted
     int64 numpy arrays (ids, degrees — the same ``mapInArrow`` pack
-    PageRank's csr gather uses, pagerank.py:_gather_sorted_arrays) and
+    csr state gathers use, csr_blocks._gather_sorted_arrays) and
     shipped once through ``sc.broadcast`` torrent transport. The
     orientation itself is then a map: each Arrow batch of canonical
     (u, v) rows looks both degrees up with a vectorized
@@ -216,7 +216,7 @@ def _oriented_array(
     import numpy as np
     import pyarrow as pa
 
-    from okapi_spark.operators.pagerank import _gather_sorted_arrays
+    from okapi_spark.plans.csr_blocks import _gather_sorted_arrays
 
     ids, (degs,) = _gather_sorted_arrays(
         deg.select(F.col("x").alias("id"), "d"), deg.count(), [("d", "int64")]
@@ -601,9 +601,10 @@ def _triangle_count_csr(
     from pyspark.storagelevel import StorageLevel
 
     from okapi_spark.bsp import no_adaptive
-    from okapi_spark.operators.pagerank import _EPOCH_COUNTER, _gather_sorted_arrays
     from okapi_spark.plans.broadcast import auto_state_broadcast
     from okapi_spark.plans.csr_blocks import (
+        _EPOCH_COUNTER,
+        _gather_sorted_arrays,
         cleanup_blocks,
         default_block_dir,
         pid_frame,

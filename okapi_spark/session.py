@@ -12,6 +12,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the driver heap never defaults above this, however large the machine
+_DRIVER_MEM_CAP_GIB = 48
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``OKAPI_DRIVER_MEM`` is unset: half
+    of physical memory in whole GiB (at least 1g), capped at
+    ``_DRIVER_MEM_CAP_GIB``. The other half is left to the JVM's
+    off-heap use and the Python workers, which run the pandas/NumPy
+    kernels outside the heap. A fixed 48g default lets the heap grow
+    past physical memory on a small machine, and the kernel then kills
+    the JVM mid-run."""
+    try:
+        phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, OSError, ValueError):  # no sysconf: be modest
+        return "4g"
+    return f"{max(1, min(_DRIVER_MEM_CAP_GIB, phys // 2 // 2**30))}g"
+
 
 def get_spark(
     cores: int | None = None,
@@ -58,7 +76,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("OKAPI_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("OKAPI_DRIVER_MEM") or default_driver_memory())
         # Commit-and-zero the heap at JVM startup (untimed setup)
         # instead of page-faulting it in lazily DURING the first big
         # shuffle: without this, vmstat during a 60M-edge triangle job

@@ -24,6 +24,11 @@ def toy_edges(spark, lines: list[tuple[int, int, float]], symmetric: bool = True
     )
 
 
+# every metrics_log row of the staged-fixpoint executor (the csr modes)
+# carries these keys, plus the program's metric
+EXECUTOR_KEYS = {"superstep", "superstep_sec", "_halted", "edges_processed"}
+
+
 # Reference toy graph: 5-vertex, triangles {1,2,3} and {3,4,5}
 # (graphs/ClusteringCoefficientTest.java:35-48, FIXTURES.md §3.1)
 FIVE_VERTEX = [

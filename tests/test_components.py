@@ -6,7 +6,7 @@ import numpy as np
 
 from okapi_spark.graph.graph import Graph
 from okapi_spark.operators.components import connected_components
-from tests.conftest import FIVE_VERTEX, toy_edges
+from tests.conftest import EXECUTOR_KEYS, FIVE_VERTEX, toy_edges
 from tests.oracles import components_oracle
 
 
@@ -95,6 +95,8 @@ def test_cc_csr_matches_oracle_and_sql_plans(spark, monkeypatch):
         assert res.converged
         got = {r.id: r.comp for r in res.state.collect()}
         assert got == want, f"csr p={nparts}"
+        for m in res.metrics_log:
+            assert set(m) == EXECUTOR_KEYS | {"changed"}
 
 
 def test_cc_csr_byte_gate(spark):

@@ -11,7 +11,7 @@ import pytest
 from okapi_spark.graph.graph import Graph
 from okapi_spark.operators.kmeans import kmeans
 from okapi_spark.operators.sybilrank import sybilrank
-from tests.conftest import toy_edges
+from tests.conftest import EXECUTOR_KEYS, toy_edges
 
 
 def test_kmeans_two_planted_clusters(spark):
@@ -147,9 +147,8 @@ def test_sybilrank_fused_matches_per_superstep_loop(spark, monkeypatch):
     import numpy as np
 
     from okapi_spark.graph.graph import Graph
-    from okapi_spark.operators import pagerank as prmod
     from okapi_spark.operators.sybilrank import sybilrank
-    from okapi_spark.plans import csr_blocks
+    from okapi_spark.plans import csr_blocks, fixpoint
 
     monkeypatch.setattr(csr_blocks, "_TARGET_BLOCK_ROWS", 16)
     rng = np.random.RandomState(61)
@@ -164,7 +163,13 @@ def test_sybilrank_fused_matches_per_superstep_loop(spark, monkeypatch):
         spark.createDataFrame(edges, "src long, dst long, weight double")
     )
     trusted = spark.createDataFrame([(0,), (3,), (7,)], "id long")
-    fused = {r.id: r.rank for r in sybilrank(g, trusted, mode="csr").state.collect()}
-    monkeypatch.setattr(prmod, "_FUSE_MAX_EDGES", 0)  # force the loop path
-    loop = {r.id: r.rank for r in sybilrank(g, trusted, mode="csr").state.collect()}
+    res_f = sybilrank(g, trusted, mode="csr")
+    fused = {r.id: r.rank for r in res_f.state.collect()}
+    monkeypatch.setattr(fixpoint, "_FUSE_MAX_EDGES", 0)  # force the loop path
+    res_l = sybilrank(g, trusted, mode="csr")
+    loop = {r.id: r.rank for r in res_l.state.collect()}
     assert fused == loop  # exact equality, not approx
+    for res in (res_f, res_l):
+        assert [m["superstep"] for m in res.metrics_log] == list(range(res.supersteps))
+        for m in res.metrics_log:
+            assert set(m) == EXECUTOR_KEYS | {"max_delta", "l1_delta"}

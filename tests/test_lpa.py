@@ -7,7 +7,7 @@ import numpy as np
 
 from okapi_spark.graph.graph import Graph
 from okapi_spark.operators.lpa import label_propagation, spinner_partition
-from tests.conftest import toy_edges
+from tests.conftest import EXECUTOR_KEYS, toy_edges
 
 
 def lpa_oracle(edges, iterations, weighted=True):
@@ -259,6 +259,8 @@ def test_lpa_csr_matches_oracle_and_sql_plans(spark, monkeypatch):
                 )
                 got = {r.id: r.lbl for r in res.state.collect()}
                 assert got == want, f"csr weighted={weighted} iters={iters} p={nparts}"
+                for m in res.metrics_log:
+                    assert set(m) == EXECUTOR_KEYS | {"changed"}
 
 
 def test_lpa_csr_tie_break_and_random_graph_parity(spark, monkeypatch):

@@ -7,7 +7,7 @@ import pytest
 
 from okapi_spark.graph.graph import Graph
 from okapi_spark.operators.pagerank import pagerank
-from tests.conftest import FIVE_VERTEX, toy_edges
+from tests.conftest import EXECUTOR_KEYS, FIVE_VERTEX, toy_edges
 from tests.oracles import pagerank_oracle
 
 
@@ -26,7 +26,7 @@ def _er_graph(n=120, p=0.05, seed=3):
     return edges
 
 
-@pytest.mark.parametrize("mode", ["sql", "csr", "csr_cogroup"])
+@pytest.mark.parametrize("mode", ["sql", "csr"])
 def test_pagerank_toy(spark, mode):
     edges = toy_edges(spark, FIVE_VERTEX)
     g = Graph.from_edges(edges)
@@ -38,7 +38,7 @@ def test_pagerank_toy(spark, mode):
         assert abs(got[v] - r) < 1e-6
 
 
-@pytest.mark.parametrize("mode", ["sql", "csr", "csr_cogroup"])
+@pytest.mark.parametrize("mode", ["sql", "csr"])
 def test_pagerank_erdos_renyi(spark, mode):
     edges = _er_graph()
     g = Graph.from_edges(spark.createDataFrame(edges, "src long, dst long, weight double"))
@@ -88,7 +88,7 @@ def test_gather_state_arrays_paths_identical(spark):
     the csr broadcast is built from whichever the size gate picks."""
     from pyspark.sql import functions as F
 
-    from okapi_spark.operators.pagerank import _gather_state_arrays
+    from okapi_spark.plans.csr_blocks import _gather_state_arrays
 
     df = (
         spark.range(0, 5000)
@@ -151,9 +151,9 @@ def test_pagerank_weighted_matches_oracle(spark, mode):
 
 
 def test_pagerank_csr_driver_loop_matches_sql_fixed_iters(spark):
-    """Round-6: mode='csr' without a store runs the driver-resident
-    NumPy state loop (one Spark job per superstep). Fixed-iteration
-    ranks must match the sql broadcast plan, metrics_log must keep the
+    """mode='csr' without a store runs the staged-fixpoint executor
+    (fused into one task inside the window). Fixed-iteration ranks
+    must match the sql broadcast plan, metrics_log must keep the
     bench-consumed keys, and a second call on the same Graph reuses
     the memoized staged blocks."""
     edges = _er_graph(n=90, p=0.06, seed=9)
@@ -167,6 +167,7 @@ def test_pagerank_csr_driver_loop_matches_sql_fixed_iters(spark):
     assert rc.supersteps == 6 and not rc.converged
     for m in rc.metrics_log:
         assert "superstep_sec" in m and "edges_processed" in m
+        assert set(m) == EXECUTOR_KEYS | {"max_delta", "l1_delta"}
     # memoized staged layout present; second call reuses it
     P = spark.sparkContext.defaultParallelism
     assert ("pr_blocks", False, P) in g._derived
@@ -174,3 +175,12 @@ def test_pagerank_csr_driver_loop_matches_sql_fixed_iters(spark):
     b2 = {r.id: r.rank for r in rc2.state.collect()}
     assert b2 == b
     g.unpersist()
+
+
+def test_pagerank_unknown_mode_raises(spark):
+    """The src-partitioned ``csr_cogroup`` variant is gone; it and any
+    other unknown mode are refused instead of silently running sql."""
+    g = Graph.from_edges(toy_edges(spark, FIVE_VERTEX))
+    for mode in ("csr_cogroup", "bogus"):
+        with pytest.raises(ValueError, match="unknown pagerank mode"):
+            pagerank(g, mode=mode)

@@ -6,11 +6,13 @@ from __future__ import annotations
 import pytest
 
 from okapi_spark.graph.graph import Graph
+from okapi_spark.operators.components import connected_components
 from okapi_spark.operators.examples import count_in_edges, master_compute_demo
+from okapi_spark.operators.lpa import label_propagation
 from okapi_spark.operators.similarity import jaccard, jaccard_approx
 from okapi_spark.operators.sssp import mssp, mssp_sources_by_fraction, sssp
 from okapi_spark.sources.edgelist import read_id_list, read_points, read_vertex_values
-from tests.conftest import FIVE_VERTEX, toy_edges
+from tests.conftest import EXECUTOR_KEYS, FIVE_VERTEX, toy_edges
 from tests.oracles import sssp_oracle
 
 
@@ -131,14 +133,13 @@ def test_mssp_csr_matches_oracle_and_sql(spark, monkeypatch):
 
 
 def test_sp_fused_matches_per_superstep_loop(spark, monkeypatch):
-    """The round-6 fused shortest-path loops (all supersteps in one job
-    over the memoized staged blocks) are BIT-identical to the
-    per-superstep csr loops they replace inside the fuse window — same
-    ``dist + w`` additions, exact mins — for both sssp and mssp."""
+    """The fused shortest-path runs (all supersteps in one task over the
+    memoized staged blocks) are BIT-identical to the per-superstep csr
+    runs the executor uses beyond the fuse window — same ``dist + w``
+    additions, exact mins — for both sssp and mssp."""
     import numpy as np
 
-    from okapi_spark.operators import pagerank as prmod
-    from okapi_spark.plans import csr_blocks
+    from okapi_spark.plans import csr_blocks, fixpoint
 
     monkeypatch.setattr(csr_blocks, "_TARGET_BLOCK_ROWS", 16)
     rng = np.random.RandomState(71)
@@ -150,16 +151,34 @@ def test_sp_fused_matches_per_superstep_loop(spark, monkeypatch):
         if s != d
     ]
     g = Graph.from_edges(toy_edges(spark, edges))
-    fused = {r.id: r.dist for r in sssp(g, 0, mode="csr").state.collect()}
-    fused_m = {
-        (r.id, r.origin): r.dist
-        for r in mssp(g, [0, 11, 47], mode="csr").state.collect()
-    }
-    monkeypatch.setattr(prmod, "_FUSE_MAX_EDGES", 0)  # force the loop path
-    loop = {r.id: r.dist for r in sssp(g, 0, mode="csr").state.collect()}
-    loop_m = {
-        (r.id, r.origin): r.dist
-        for r in mssp(g, [0, 11, 47], mode="csr").state.collect()
-    }
+    # components and LPA (fixed rounds, and to no-change/oscillation)
+    # run through the same executor and ride along as extra inputs
+    calls = [
+        lambda: sssp(g, 0, mode="csr"),
+        lambda: mssp(g, [0, 11, 47], mode="csr"),
+        lambda: connected_components(g, mode="csr"),
+        lambda: label_propagation(g, iterations=4, mode="csr"),
+        lambda: label_propagation(g, max_supersteps=30, mode="csr"),
+    ]
+    runs = [call() for call in calls]
+    monkeypatch.setattr(fixpoint, "_FUSE_MAX_EDGES", 0)  # force the loop path
+    loops = [call() for call in calls]
+    fused = {r.id: r.dist for r in runs[0].state.collect()}
+    fused_m = {(r.id, r.origin): r.dist for r in runs[1].state.collect()}
+    loop = {r.id: r.dist for r in loops[0].state.collect()}
+    loop_m = {(r.id, r.origin): r.dist for r in loops[1].state.collect()}
     assert fused == loop  # exact equality, not approx
     assert fused_m == loop_m
+    for a, b in zip(runs[2:], loops[2:]):
+        assert sorted(map(tuple, a.state.collect())) == sorted(map(tuple, b.state.collect()))
+        assert (a.supersteps, a.converged) == (b.supersteps, b.converged)
+    assert runs[2].converged and runs[4].converged
+    # the converging LPA halts where the sql plan's halt does
+    sql = label_propagation(g, max_supersteps=30, mode="sql")
+    assert sql.supersteps == runs[4].supersteps
+    assert sorted(map(tuple, sql.state.collect())) == sorted(map(tuple, runs[4].state.collect()))
+    # one metrics_log schema for fused and per-round runs
+    for i, res in enumerate(runs + loops):
+        extra = {"state_hash"} if i % len(calls) == 4 else set()
+        for m in res.metrics_log:
+            assert set(m) == EXECUTOR_KEYS | {"changed"} | extra

@@ -124,43 +124,40 @@ def test_shuffle_mode_superstep_builds_hash_not_sort(spark):
 
 
 def test_lpa_csr_kernel_plan_zero_exchange_zero_edge_scan(spark):
-    """The staged LPA csr superstep must (a) add no shuffle exchange
-    and (b) never rescan the edge table: after ``stage_blocks`` the
-    per-superstep job is a P-row Range → mapInPandas — the edge bytes
+    """The staged-fixpoint executor's per-round job must (a) add no
+    shuffle exchange and (b) never rescan the edge table: after staging
+    the per-round job is a P-row Range → mapInPandas — the edge bytes
     live in worker-cached / page-cached block files, not in the plan."""
-    from okapi_spark.operators.lpa import _csr_best_labels, _lpa_pack
-    from okapi_spark.plans.csr_blocks import (
-        cleanup_blocks, default_block_dir, stage_blocks,
-    )
+    import pickle
+
+    import numpy as np
+
+    from okapi_spark.plans.csr_blocks import staged_blocks
+    from okapi_spark.plans.fixpoint import LabelProgram, _ids_sorted, round_job
 
     e = generate_edges(spark, 50_000, 2_000)
     g = Graph.from_edges(e)
-    edges = (
-        g.edges.select("src", "dst", F.lit(1.0).alias("weight"))
-        .withColumn("pid", F.pmod(F.xxhash64("dst"), F.lit(8)).cast("int"))
-        .repartition(8, "pid")
+    block_dir, epoch = staged_blocks(
+        g, ("lpa_blocks", True, 8), "lpa",
+        g.edges.select("src", "dst", F.lit(1.0).alias("w")), 8,
     )
-    block_dir = default_block_dir(spark)
-    staged = stage_blocks(edges, 8, _lpa_pack, "lpa", epoch=-1, block_dir=block_dir)
-    assert staged == e.count()
-    state = g.vertices().select("id", F.col("id").alias("lbl"))
-    slot = [None]
-    best = _csr_best_labels(
-        spark, 8, 4, epoch=-1, block_dir=block_dir,
-        state=state, bcast_slot=slot, n_rows=2_000,
-    )
+    prog = LabelProgram(converge=False)
+    ids = _ids_sorted(g, 8)
+    b = spark.sparkContext.broadcast((ids, prog.init(ids)))
+    job = round_job(spark, prog, b, epoch, block_dir, num_blocks=8, num_tasks=4)
     try:
-        assert count_exchanges(best) == 0, "csr superstep plan must not shuffle"
-        plan = best._jdf.queryExecution().executedPlan().toString()
+        assert count_exchanges(job) == 0, "csr superstep plan must not shuffle"
+        plan = job._jdf.queryExecution().executedPlan().toString()
         assert "Range" in plan, plan
         for scan_marker in ("InMemoryTableScan", "Scan parquet", "Scan ExistingRDD"):
             assert scan_marker not in plan, f"superstep rescans edges:\n{plan}"
-        # and it computes the right thing from the staged blocks
-        assert best.count() > 0
+        # and it computes the right thing from the staged blocks: every
+        # vertex with an in-edge gets exactly one label
+        tgt = np.concatenate([pickle.loads(r.out)[0] for r in job.collect()])
+        assert len(tgt) == len(np.unique(tgt)) > 0
     finally:
-        if slot[0] is not None:
-            slot[0].destroy()
-        cleanup_blocks(block_dir)
+        b.destroy()
+        g.unpersist()
 
 
 def test_triangle_orientation_broadcast_plan(spark):
